@@ -780,36 +780,24 @@ def _write_parquet_checkpoint(path: str, files: list[dict], version: int) -> dic
     return ptr
 
 
-def _read_parquet_checkpoint(path: str, ckpt: dict, table=None) -> list[dict]:
+def _read_parquet_checkpoint(path: str, ckpt: dict) -> list[dict]:
     """Resolve a ``files_ckpt`` pointer back to FULL-FIDELITY manifest
     entries. Key-set discipline mirrors the builders: ``path``/``rows``/
     ``stats`` always present, optional keys only when non-null. The typed
     layout rebuilds entries from native arrays with no payload JSON parse;
     the json layout parses each JSON column in ONE batched ``json.loads``
     (a single C-speed parse of a synthesized array), not one call per row.
-    Callers holding the cached Arrow handle pass it as ``table`` to skip
-    the re-read; consumers that need only path/partition/dv should use
-    ``_manifest_files_scan`` and never materialize full entries."""
-    import io
-
-    import pyarrow.parquet as pq
-
-    if table is None:
-        abs_p = os.path.join(_manifest_dir(path), ckpt["ref"])
-        table = pq.read_table(io.BytesIO(_fs().read_bytes(abs_p)))
+    The sidecar is read (and its entry count checked) through the cached
+    Arrow handle, ``_ckpt_table``; consumers that need only path/partition/
+    dv should use ``_manifest_files_scan`` and never materialize full
+    entries."""
+    table = _ckpt_table(path, ckpt)
     if ckpt.get("layout", "json") == "typed":
         out = _decode_typed_ckpt_fast(table, ckpt)
         if out is None:  # guard tripped (escapes/non-finite) or no orjson
             out = _decode_typed_ckpt(table.to_pydict(), ckpt)
-    else:
-        out = _decode_json_ckpt(table.to_pydict())
-    if len(out) != ckpt.get("count", len(out)):
-        raise RuntimeError(
-            f"parquet checkpoint {ckpt['ref']} at {path}: read "
-            f"{len(out)} entries, manifest pins {ckpt['count']} — "
-            f"truncated or corrupt checkpoint; refusing a partial file list"
-        )
-    return out
+        return out
+    return _decode_json_ckpt(table.to_pydict())
 
 
 def _decode_json_ckpt(d: dict) -> list[dict]:
@@ -1033,18 +1021,19 @@ def _decode_typed_ckpt(d: dict, ckpt: dict) -> list[dict]:
     return out
 
 
-# The sidecar as a pyarrow Table, cached — manifests (and their
-# checkpoints) are immutable, so entries never go stale; keyed like
-# _FILES_CACHE with the ref appended (a table dropped and re-created at
-# the same path gets a new uuid'd ref). Tables are immutable and shared
-# as-is, no defensive copy needed.
+# The sidecar as a pyarrow Table, cached — checkpoints are immutable, so
+# entries never go stale; keyed on (table path, ref): every sidecar gets
+# its own uuid'd ref, so a table dropped and re-created at the same path
+# never hits a stale entry. Tables are immutable and shared as-is, no
+# defensive copy needed.
 _CKPT_TABLE_CACHE: dict = {}
 _CKPT_TABLE_CACHE_MAX = 8
 
 
-def _ckpt_table(path: str, m: dict):
-    """Columnar handle on a ``files_ckpt`` sidecar: the Arrow table
-    itself, never materialized into Python dicts. This is what the scan
+def _ckpt_table(path: str, ck: dict):
+    """Columnar handle on the sidecar a ``files_ckpt`` pointer ``ck``
+    names: the Arrow table itself, never materialized into Python dicts,
+    its entry count checked against the pointer. This is what the scan
     planner, vacuum's path sweeps, and history's id chain consume — the
     100 TB design point is that a FULL cold resolve stays columnar end to
     end, and per-entry dicts are built only by consumers that genuinely
@@ -1053,8 +1042,7 @@ def _ckpt_table(path: str, m: dict):
 
     import pyarrow.parquet as pq
 
-    ck = m["files_ckpt"]
-    key = (path, m.get("version"), m.get("committed_at"), ck["ref"])
+    key = (path, ck["ref"])
     with _FILES_CACHE_LOCK:
         hit = _CKPT_TABLE_CACHE.get(key)
     if hit is not None:
@@ -1088,7 +1076,7 @@ def _manifest_files_scan(path: str, m: dict) -> list[dict]:
     ck = m.get("files_ckpt")
     if not ck:
         return _manifest_files(path, m)
-    t = _ckpt_table(path, m)
+    t = _ckpt_table(path, ck)
     out: list[dict] = [{"path": p} for p in t.column("path").to_pylist()]
     if ck.get("layout") == "typed":
         part_cols = ck.get("part_cols") or []
@@ -1126,9 +1114,10 @@ def _ckpt_entry_keys(path: str, m: dict) -> set:
     """Vectorized ``_ekey`` set of a checkpoint-form manifest (path +
     dv ref identity) — two sidecar columns, no dict materialization; the
     history id chain's seed."""
-    t = _ckpt_table(path, m)
+    ck = m["files_ckpt"]
+    t = _ckpt_table(path, ck)
     paths = t.column("path").to_pylist()
-    if m["files_ckpt"].get("layout") == "typed":
+    if ck.get("layout") == "typed":
         refs = t.column("dv_ref").to_pylist()
         return {
             f"{p}@{r}" if r is not None else f"{p}@"
@@ -1187,13 +1176,10 @@ def _manifest_files_pruned_in(
         except TypeError:  # mixed-type values: full resolve decides
             return None
     i = stats_cols.index(phys_col)
-    import io
-
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    table = _ckpt_table(path, m)
+    table = _ckpt_table(path, ck)
     has = table[f"s{i}_has"]
     mn, mx = table[f"s{i}_min"], table[f"s{i}_max"]
     any_hit = None
@@ -1249,13 +1235,10 @@ def _manifest_files_pruned(
     }
     if not usable:
         return None
-    import io
-
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    table = _ckpt_table(path, m)
+    table = _ckpt_table(path, ck)
     lit_for = _ckpt_cmp_scalar
     keep = None
     try:
@@ -1316,48 +1299,36 @@ def _manifest_files(path: str, m: dict) -> list[dict]:
     expanded by listing their data dirs (no stats)."""
     if "files" in m:
         return m["files"]
-    if "files_ckpt" in m:
-        key = (path, m.get("version"), m.get("committed_at"), "ckpt")
-        if m.get("version") is not None:
-            with _FILES_CACHE_LOCK:
-                hit = _FILES_CACHE.get(key)
-                if hit is not None:
-                    return list(hit)
-        out = _read_parquet_checkpoint(
-            path, m["files_ckpt"], table=_ckpt_table(path, m)
-        )
-        if m.get("version") is not None:
-            with _FILES_CACHE_LOCK:
-                while len(_FILES_CACHE) >= _FILES_CACHE_MAX:
-                    _FILES_CACHE.pop(next(iter(_FILES_CACHE)))
-                _FILES_CACHE[key] = list(out)
+    if "files_ckpt" not in m and "files_base" not in m:
+        out = []
+        for d in m["data_dirs"]:
+            full = os.path.join(path, d)
+            for f in sorted(_fs().list_dir(full)):
+                if f.endswith(".parquet"):
+                    out.append({"path": f"{d}/{f}", "rows": None, "stats": None})
         return out
-    if "files_base" in m:
-        # committed_at in the key guards a table dropped and re-created at
-        # the same path within one process: same (path, version) can then
-        # name two different manifests.
-        key = (path, m.get("version"), m.get("committed_at"))
-        if m.get("version") is not None:
-            with _FILES_CACHE_LOCK:
-                hit = _FILES_CACHE.get(key)
-                if hit is not None:
-                    return list(hit)
+    # committed_at in the key guards a table dropped and re-created at
+    # the same path within one process: same (path, version) can then
+    # name two different manifests.
+    key = (path, m.get("version"), m.get("committed_at"))
+    memo = m.get("version") is not None
+    if memo:
+        with _FILES_CACHE_LOCK:
+            hit = _FILES_CACHE.get(key)
+            if hit is not None:
+                return list(hit)
+    if "files_ckpt" in m:
+        out = _read_parquet_checkpoint(path, m["files_ckpt"])
+    else:
         base_files = _manifest_files(path, _read_manifest(path, m["files_base"]))
         rm = set(m.get("files_remove") or [])
         out = [e for e in base_files if _ekey(e) not in rm]
         out += list(m.get("files_add") or [])
-        if m.get("version") is not None:
-            with _FILES_CACHE_LOCK:
-                while len(_FILES_CACHE) >= _FILES_CACHE_MAX:
-                    _FILES_CACHE.pop(next(iter(_FILES_CACHE)))
-                _FILES_CACHE[key] = list(out)
-        return out
-    out = []
-    for d in m["data_dirs"]:
-        full = os.path.join(path, d)
-        for f in sorted(_fs().list_dir(full)):
-            if f.endswith(".parquet"):
-                out.append({"path": f"{d}/{f}", "rows": None, "stats": None})
+    if memo:
+        with _FILES_CACHE_LOCK:
+            while len(_FILES_CACHE) >= _FILES_CACHE_MAX:
+                _FILES_CACHE.pop(next(iter(_FILES_CACHE)))
+            _FILES_CACHE[key] = list(out)
     return out
 
 
@@ -3581,6 +3552,158 @@ def _rebase_concurrent(
     return out, latest["n_rows"] - sum(live_replaced) + sum(live_produced)
 
 
+def _commit_rewrite(
+    spark: SparkSession,
+    path: str,
+    cur: dict,
+    base_version: int,
+    *,
+    op: str,
+    replaced: list[dict],
+    produced: list[dict],
+    files: list[dict],
+    n_rows: int,
+    schema: str | None = None,
+    extra: dict | None = None,
+    **conflict,
+) -> int:
+    """Commit tail of every rewrite (MERGE, predicate DML, replaceWhere,
+    dynamic overwrite, OPTIMIZE): the one place the rebase-or-commit rule
+    lives. ``files``/``n_rows`` are the new version as planned against
+    ``cur`` (version ``base_version``) and commit as-is when no other
+    commit landed meanwhile. When the version moved, ``_rebase_concurrent``
+    decides from ``replaced``/``produced`` and the ``conflict`` arguments
+    (passed straight through) whether the plan still holds on top of the
+    winner: it rebases, or raises ``ConcurrentSnapshotError``. The manifest
+    records ``schema`` (default: ``cur``'s), ``cur``'s column mapping and
+    any ``extra`` keys; ``op`` names the operation in conflict messages and
+    in the history stamp."""
+    mapping = _mapping(cur)
+
+    def build(latest: dict | None, version: int) -> dict:
+        if latest is None:
+            raise ConcurrentSnapshotError(f"{path}: table vanished during {op}")
+        if latest["version"] == base_version:
+            files_out, rows_out = files, n_rows
+        else:
+            files_out, rows_out = _rebase_concurrent(
+                spark, path, cur, latest,
+                replaced=replaced, produced=produced,
+                op=op, mapping=mapping, **conflict,
+            )
+        out = {
+            "data_dirs": _dirs_of(files_out),
+            "files": files_out,
+            "n_rows": rows_out,
+            "schema": schema or cur["schema"],
+            **(extra or {}),
+        }
+        if mapping:
+            out["column_mapping"] = mapping
+        return out
+
+    return _commit(path, build, op=op)
+
+
+def _land_rows(
+    spark: SparkSession, path: str, cur: dict, df: DataFrame, stats_cols: list
+) -> tuple[list[dict], int]:
+    """Write ``df`` (logical columns) to a fresh data dir of ``path``;
+    return its manifest entries and row count. A partitioned table lands
+    in Hive layout — exact [v, v] stats on the partition columns, min/max
+    on the other ``stats_cols`` (physical names); an unpartitioned one
+    carries ``stats_cols`` plus the table's bloom columns."""
+    mapping = _mapping(cur)
+    pcols = [_phys(mapping, c) for c in cur.get("partition_cols") or []]
+    rel, full = _new_data_dir(path)
+    phys_df = _to_physical_df(df, mapping)
+    if not pcols:
+        phys_df.write.mode("error").parquet(full)
+        return _scan_file_entries(
+            spark, full, rel, stats_cols, _bloom_cols_in_use(path, cur)
+        )
+    phys_df.write.partitionBy(*pcols).mode("error").parquet(full)
+    return _scan_file_entries(
+        spark, full, rel,
+        [c for c in stats_cols if c not in pcols],
+        partition_cols=pcols,
+        # declared (physical) types, not path re-inference: a string
+        # partition value like '0095' must not re-type to int 95
+        read_schema=phys_df.schema,
+    )
+
+
+def _carried_rows(
+    spark: SparkSession, path: str, cur: dict, untouched: list[dict]
+) -> int:
+    """LIVE rows of the entries a rewrite carries by reference: the
+    manifest counts (entries carrying a deletion vector contribute
+    physical minus dead), or a count of the data when a legacy entry has
+    no row count."""
+    if any(e["rows"] is None for e in untouched):
+        return _read_entries(spark, path, cur, untouched).count()
+    return sum(_live_rows(e) for e in untouched)
+
+
+def _key_candidates(
+    keys: DataFrame, files: list[dict], key_cols: list, mapping: dict
+) -> tuple:
+    """Keyed-MERGE prune stage 1, in metadata only: the per-column
+    ``_lo_<c>``/``_hi_<c>`` bounds of ``keys`` and the ``files`` whose
+    min/max stats may hold a key inside them."""
+    bounds = keys.agg(
+        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
+        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
+    ).collect()[0]
+    candidates = [
+        e
+        for e in files
+        if all(
+            _stats_may_contain(
+                e.get("stats"), _phys(mapping, c),
+                bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
+            )
+            for c in key_cols
+        )
+    ]
+    return bounds, candidates
+
+
+def _split_by_keys(
+    spark: SparkSession,
+    path: str,
+    cur: dict,
+    files: list[dict],
+    candidates: list[dict],
+    keys: DataFrame,
+    key_cols: list,
+) -> tuple[list[dict], list[dict]]:
+    """Keyed-MERGE prune stage 2: ONE column-pruned key-membership scan
+    (key columns + file lineage) over ``candidates`` splits ``files`` into
+    (touched, untouched) — the files that truly hold one of ``keys``'s
+    keys and the rest. DV-aware: a key living only in a file's DEAD
+    positions does not drag the file into the rewrite set (or worse,
+    resurrect on read)."""
+    touched_paths: set[str] = set()
+    if candidates:
+        hits = (
+            _read_entries(spark, path, cur, candidates, lineage=True)
+            .select(*key_cols, _SN_FILE)
+            .join(F.broadcast(keys.select(*key_cols).distinct()), key_cols)
+            .select(_SN_FILE)
+            .distinct()
+            .collect()
+        )
+        hit_rels = {r[_SN_FILE] for r in hits}
+        touched_paths = {
+            e["path"] for e in candidates if _entry_rid(e) in hit_rels
+        }
+    return (
+        [e for e in files if e["path"] in touched_paths],
+        [e for e in files if e["path"] not in touched_paths],
+    )
+
+
 def _merge_dv(
     spark: SparkSession,
     df: DataFrame,
@@ -3646,38 +3769,18 @@ def _merge_dv(
     # the re-pointed versions it produces (plus the fresh winners file).
     repointed_base = [e for e in files if _entry_rid(e) in new_dead]
     repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-    out_files = out_files + new_files
-    n_killed = sum(new_dead.values())
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base,
-                produced=repointed_new + new_files,
-                op="merge_dv", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, key_rows=key_rows, incoming=incoming,
-                # candidates whose stored seq BEAT an incoming row are not
-                # repointed, yet their content dropped that row from the
-                # winners — a concurrent delete of one invalidates the plan
-                read_set=candidates,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"] - n_killed + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="merge_dv")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="merge_dv",
+        replaced=repointed_base, produced=repointed_new + new_files,
+        files=out_files + new_files,
+        n_rows=cur["n_rows"] - sum(new_dead.values()) + n_new,
+        extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, key_rows=key_rows, incoming=incoming,
+        # candidates whose stored seq BEAT an incoming row are not
+        # repointed, yet their content dropped that row from the
+        # winners — a concurrent delete of one invalidates the plan
+        read_set=candidates,
+    )
 
 
 def snapshot_merge(
@@ -3790,20 +3893,7 @@ def snapshot_merge(
 
     files = _manifest_files(path, cur)
     # --- prune stage 1: manifest stats vs incoming key bounds ------------
-    bounds = incoming.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-    ).collect()[0]
-    candidates = [
-        e
-        for e in files
-        if all(
-            _stats_may_contain(
-                e.get("stats"), _phys(mapping, c), bounds[f"_lo_{c}"], bounds[f"_hi_{c}"]
-            )
-            for c in key_cols
-        )
-    ]
+    bounds, candidates = _key_candidates(incoming, files, key_cols, mapping)
     # --- prune stage 1.5: per-key refinement for SMALL batches -----------
     # Batch-wide bounds cannot prune a scattered micro-batch; point tests
     # per incoming key (stats + blooms) can — the maintenance-wave shape.
@@ -3829,24 +3919,9 @@ def snapshot_merge(
             bounds=bounds, key_rows=key_rows,
         )
     # --- prune stage 2: exact key membership over candidates only --------
-    # DV-aware: a key living only in a file's DEAD positions must not drag
-    # the file into the rewrite set (or worse, resurrect on read).
-    touched_paths: set[str] = set()
-    if candidates:
-        hits = (
-            _read_entries(spark, path, cur, candidates, lineage=True)
-            .select(*key_cols, _SN_FILE)
-            .join(F.broadcast(incoming.select(*key_cols).distinct()), key_cols)
-            .select(_SN_FILE)
-            .distinct()
-            .collect()
-        )
-        hit_rels = {r[_SN_FILE] for r in hits}
-        touched_paths = {
-            e["path"] for e in candidates if _entry_rid(e) in hit_rels
-        }
-    touched = [e for e in files if e["path"] in touched_paths]
-    untouched = [e for e in files if e["path"] not in touched_paths]
+    touched, untouched = _split_by_keys(
+        spark, path, cur, files, candidates, incoming, key_cols
+    )
 
     # --- rewrite: touched rows ⊎ incoming, keep highest seq per key ------
     if touched:
@@ -3881,43 +3956,14 @@ def snapshot_merge(
         [_phys(mapping, c) for c in key_cols],
         _bloom_cols_in_use(path, cur),
     )
-
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        # n_rows counts LIVE rows: entries carrying a deletion vector
-        # contribute physical minus dead.
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op="merge", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, key_rows=key_rows, incoming=incoming,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="merge")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="merge",
+        replaced=touched, produced=new_files,
+        files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, key_rows=key_rows, incoming=incoming,
+    )
 
 
 def _mw_first_clause_idx(clauses, guard):
@@ -4113,21 +4159,7 @@ def snapshot_merge_when(
     files = _manifest_files(path, cur)
 
     # --- stage 1: manifest min/max vs the source's key bounds ------------
-    bounds = source.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-    ).collect()[0]
-    candidates = [
-        e
-        for e in files
-        if all(
-            _stats_may_contain(
-                e.get("stats"), _phys(mapping, c),
-                bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
-            )
-            for c in key_cols
-        )
-    ]
+    bounds, candidates = _key_candidates(source, files, key_cols, mapping)
 
     # Delta guard: a target row matched by >1 source row is an error.
     dup_keys = (
@@ -4158,24 +4190,9 @@ def snapshot_merge_when(
         touched, untouched = list(files), []
     elif rewrite_matched:
         # --- stage 2: exact key membership over candidates only ----------
-        touched_paths: set[str] = set()
-        if candidates:
-            hits = (
-                _read_entries(spark, path, cur, candidates, lineage=True)
-                .select(*key_cols, _SN_FILE)
-                .join(
-                    F.broadcast(source.select(*key_cols).distinct()), key_cols
-                )
-                .select(_SN_FILE)
-                .distinct()
-                .collect()
-            )
-            hit_rels = {r[_SN_FILE] for r in hits}
-            touched_paths = {
-                e["path"] for e in candidates if _entry_rid(e) in hit_rels
-            }
-        touched = [e for e in files if e["path"] in touched_paths]
-        untouched = [e for e in files if e["path"] not in touched_paths]
+        touched, untouched = _split_by_keys(
+            spark, path, cur, files, candidates, source, key_cols
+        )
     else:
         # Insert-only merge: rewrite nothing; drop source rows whose key
         # already exists (one broadcast anti-join against candidate keys).
@@ -4316,46 +4333,21 @@ def snapshot_merge_when(
         spark, full_dir, rel, _stats_cols_in_use(cur, path),
         _bloom_cols_in_use(path, cur),
     )
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op="merge", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, incoming=source,
-                # WHEN NOT MATCHED BY SOURCE classifies every target row:
-                # ANY concurrently added row invalidates the plan (Delta's
-                # documented full-table conflict for the clause).
-                forbid_adds=bool(when_not_matched_by_source),
-                read_set=consulted,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        mf = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            # schema evolution widens here; identical to cur otherwise
-            "schema": schema.json(),
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            mf["column_mapping"] = mapping
-        return mf
-
-    return _commit(path, build, op="merge")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="merge",
+        replaced=touched, produced=new_files,
+        files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        # schema evolution widens here; identical to cur otherwise
+        schema=schema.json(),
+        extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, incoming=source,
+        # WHEN NOT MATCHED BY SOURCE classifies every target row:
+        # ANY concurrently added row invalidates the plan (Delta's
+        # documented full-table conflict for the clause).
+        forbid_adds=bool(when_not_matched_by_source),
+        read_set=consulted,
+    )
 
 
 def _stats_cols_in_use(cur: dict, path: str | None = None) -> list[str]:
@@ -4437,40 +4429,13 @@ def _rewrite_touched(
     new_files, n_new = _scan_file_entries(
         spark, full_dir, rel, _stats_cols_in_use(cur, path), _bloom_cols_in_use(path, cur)
     )
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        # n_rows counts LIVE rows: entries carrying a deletion vector
-        # contribute physical minus dead.
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during {op}")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op=op, mapping=mapping, predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op=op)
+    return _commit_rewrite(
+        spark, path, cur, base_version, op=op,
+        replaced=touched, produced=new_files,
+        files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        predicate=predicate,
+    )
 
 
 def snapshot_delete_where(
@@ -4525,33 +4490,12 @@ def snapshot_delete_where(
             dropped, kept = split
             if not dropped:
                 return None
-            n_kept = sum(_live_rows(e) for e in kept)
-
-            def build(latest: dict | None, version: int) -> dict:
-                if latest is None:
-                    raise ConcurrentSnapshotError(
-                        f"{path}: table vanished during delete_where"
-                    )
-                if latest["version"] != base_version:
-                    files_out, n_rows = _rebase_concurrent(
-                        spark, path, cur, latest,
-                        replaced=dropped, produced=[],
-                        op="delete_where", mapping=_mapping(cur),
-                        predicate=predicate,
-                    )
-                else:
-                    files_out, n_rows = kept, n_kept
-                out = {
-                    "data_dirs": _dirs_of(files_out),
-                    "files": files_out,
-                    "n_rows": n_rows,
-                    "schema": cur["schema"],
-                }
-                if _mapping(cur):
-                    out["column_mapping"] = _mapping(cur)
-                return out
-
-            return _commit(path, build, op="delete_where")
+            return _commit_rewrite(
+                spark, path, cur, base_version, op="delete_where",
+                replaced=dropped, produced=[],
+                files=kept, n_rows=sum(_live_rows(e) for e in kept),
+                predicate=predicate,
+            )
     if mode == "dv":
         return _delete_where_dv(spark, path, cur, base_version, predicate)
     touched, untouched = _predicate_file_split(spark, path, cur, predicate)
@@ -4765,40 +4709,17 @@ def snapshot_replace_where(
     if _ident_unpin:
         _ident_unpin()
     produced = rewritten + incoming
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count() if untouched else 0
-        )
-    else:
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    produced_rows = sum(_live_rows(e) for e in produced)
-    out_files = untouched + produced
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(
-                f"{path}: table vanished during replace_where"
-            )
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=produced,
-                op="replace_where", mapping=mapping, predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + produced_rows
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="replace_where")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="replace_where",
+        replaced=touched, produced=produced,
+        files=untouched + produced,
+        n_rows=(
+            _carried_rows(spark, path, cur, untouched)
+            + sum(_live_rows(e) for e in produced)
+        ),
+        extra=manifest_extra,
+        predicate=predicate,
+    )
 
 
 def snapshot_dynamic_partition_overwrite(
@@ -4863,47 +4784,21 @@ def snapshot_dynamic_partition_overwrite(
     dropped = [e for e in files if entry_tuple(e) in tuples]
     kept = [e for e in files if entry_tuple(e) not in tuples]
     df2, _ident_unpin = _assign_identity(df, path, "dynamic_overwrite")
-    rel, full = _new_data_dir(path)
-    phys_df = _to_physical_df(df2, mapping)
-    phys_df.write.partitionBy(*phys).mode("error").parquet(full)
-    new_files, n_in = _scan_file_entries(
-        spark, full, rel,
-        [c for c in _stats_cols_in_use(cur, path) if c not in phys],
-        partition_cols=phys, read_schema=phys_df.schema,
+    new_files, n_in = _land_rows(
+        spark, path, cur, df2, _stats_cols_in_use(cur, path)
     )
     if _ident_unpin:
         _ident_unpin()
-    kept_rows = sum(_live_rows(e) for e in kept)
-    out_files = kept + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(
-                f"{path}: table vanished during dynamic overwrite"
-            )
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=dropped, produced=new_files,
-                op="dynamic_overwrite", mapping=mapping,
-                # multi-column tuple membership has no single-predicate
-                # form for the adds check: any concurrent add conflicts
-                forbid_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, kept_rows + n_in
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="dynamic_overwrite")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="dynamic_overwrite",
+        replaced=dropped, produced=new_files,
+        files=kept + new_files,
+        n_rows=sum(_live_rows(e) for e in kept) + n_in,
+        extra=manifest_extra,
+        # multi-column tuple membership has no single-predicate
+        # form for the adds check: any concurrent add conflicts
+        forbid_adds=True,
+    )
 
 
 def _delete_where_dv(
@@ -4920,32 +4815,13 @@ def _delete_where_dv(
     ref, new_dead, out_files = _dv_land_positions(spark, path, cur, hits)
     if ref is None:
         return None
-    n_deleted = sum(new_dead.values())
-    repointed_base = [e for e in files if _entry_rid(e) in new_dead]
-    repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during delete_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base, produced=repointed_new,
-                op="delete_dv", mapping=_mapping(cur), predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"] - n_deleted
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if _mapping(cur):
-            out["column_mapping"] = _mapping(cur)
-        return out
-
-    return _commit(path, build, op="delete_dv")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="delete_dv",
+        replaced=[e for e in files if _entry_rid(e) in new_dead],
+        produced=[e for e in out_files if _entry_rid(e) in new_dead],
+        files=out_files, n_rows=cur["n_rows"] - sum(new_dead.values()),
+        predicate=predicate,
+    )
 
 
 def _update_where_dv(
@@ -5005,33 +4881,15 @@ def _update_where_dv(
             f"dv-update image drift at {path}: marked {sum(new_dead.values())} "
             f"dead but wrote {n_new} updated rows"
         )
-    repointed_base = [e for e in files if _entry_rid(e) in new_dead]
     repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-    out_files = out_files + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during update_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base, produced=repointed_new + new_files,
-                op="update_dv", mapping=mapping, predicate=predicate,
-            )
-        else:
-            # dead added == images added
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="update_dv")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="update_dv",
+        replaced=[e for e in files if _entry_rid(e) in new_dead],
+        produced=repointed_new + new_files,
+        # dead added == images added
+        files=out_files + new_files, n_rows=cur["n_rows"],
+        predicate=predicate,
+    )
 
 
 def snapshot_update_where(
@@ -5251,9 +5109,9 @@ def snapshot_compact(
                 "conjunct (supported: top-level AND of column-vs-literal "
                 "comparisons / IN lists); run without WHERE to compact all"
             )
-        mapping0 = _mapping(cur)
+        mapping = _mapping(cur)
         small = [
-            e for e in small if _pred_may_match_entry(e, conjuncts, mapping0)
+            e for e in small if _pred_may_match_entry(e, conjuncts, mapping)
         ]
     if purge_dvs:
         # REORG PURGE parity: files carrying a deletion vector join the
@@ -5269,7 +5127,7 @@ def snapshot_compact(
             and e["path"] not in seen
             and (
                 where is None
-                or _pred_may_match_entry(e, conjuncts, mapping0)
+                or _pred_may_match_entry(e, conjuncts, mapping)
             )
         ]
     small_paths = {e["path"] for e in small}
@@ -5282,9 +5140,7 @@ def snapshot_compact(
     stats_cols = sorted(
         {c for e in small if e.get("stats") for c in e["stats"]}
     )
-    mapping = _mapping(cur)
-    pcols = [_phys(mapping, c) for c in (cur.get("partition_cols") or [])]
-    rel, full = _new_data_dir(path)
+    pcols = cur.get("partition_cols") or []
     if pcols:
         # Partitioned tables compact WITHIN partitions (Delta OPTIMIZE
         # bin-packs per partition): the folded output lands back in Hive
@@ -5293,60 +5149,29 @@ def snapshot_compact(
         # maintenance. repartition on the partition columns keeps each
         # tuple in one task (≈ one output file per partition tuple).
         folded = _read_entries(spark, path, cur, small).repartition(
-            max(n_out, 1), *[F.col(c) for c in (cur.get("partition_cols") or [])]
-        )
-        phys_folded = _to_physical_df(folded, mapping)
-        phys_folded.write.partitionBy(*pcols).mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel,
-            [c for c in stats_cols if c not in pcols],
-            partition_cols=pcols,
-            # declared (physical) types, not path re-inference: a string
-            # partition value like '0095' must not re-type to int 95
-            read_schema=phys_folded.schema,
+            max(n_out, 1), *[F.col(c) for c in pcols]
         )
     else:
         folded = _read_entries(spark, path, cur, small).coalesce(n_out)
-        _to_physical_df(folded, mapping).write.mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel, stats_cols, _bloom_cols_in_use(path, cur)
-        )
+    new_files, n_new = _land_rows(spark, path, cur, folded, stats_cols)
     if n_new != small_rows:
         # Not an assert: integrity checks must survive ``python -O``.
         raise RuntimeError(
             f"compaction row-count drift at {path}: {small_rows} in, {n_new} out"
         )
-    out_files = big + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during compaction")
-        if latest["version"] != base_version:
-            # Folding OTHER files never conflicts with concurrently ADDED
-            # rows (allow_any_adds); it only conflicts when a concurrent
-            # commit touched one of the files being folded.
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=small, produced=new_files,
-                op="compaction", mapping=mapping, allow_any_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            # Delta marks OPTIMIZE commits dataChange=false; the change feed
-            # skips them so keyless consumers don't see the whole compacted
-            # set as insert+delete (see snapshot_changes).
-            "data_change": False,
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="compact")
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="compact",
+        replaced=small, produced=new_files,
+        files=big + new_files, n_rows=cur["n_rows"],
+        # Delta marks OPTIMIZE commits dataChange=false; the change feed
+        # skips them so keyless consumers don't see the whole compacted
+        # set as insert+delete (see snapshot_changes).
+        extra={"data_change": False},
+        # Folding OTHER files never conflicts with concurrently ADDED
+        # rows; it only conflicts when a concurrent commit touched one of
+        # the files being folded.
+        allow_any_adds=True,
+    )
 
 
 def _z_numeric(df: DataFrame, c: str):
@@ -5481,7 +5306,6 @@ def snapshot_zorder(
 
     zdf, helper_cols = _zvalue(data, cols, bits)
     pcols_log = list(cur.get("partition_cols") or [])
-    pcols = [_phys(mapping, c) for c in pcols_log]
     if pcols_log:
         # Partitioned tables z-order WITHIN partitions (Delta semantics):
         # range-partitioning on (partition cols, zval) aligns task splits
@@ -5505,56 +5329,24 @@ def snapshot_zorder(
         {_phys(mapping, c) for c in cols}
         | {c for e in folded if e.get("stats") for c in e["stats"]}
     )
-    rel, full = _new_data_dir(path)
-    phys_clustered = _to_physical_df(clustered, mapping)
-    if pcols:
-        phys_clustered.write.partitionBy(*pcols).mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel,
-            [c for c in stats_cols if c not in pcols],
-            partition_cols=pcols,
-            read_schema=phys_clustered.schema,
-        )
-    else:
-        phys_clustered.write.mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel, stats_cols, _bloom_cols_in_use(path, cur),
-        )
+    new_files, n_new = _land_rows(spark, path, cur, clustered, stats_cols)
     if folded_rows is not None and n_new != folded_rows:
         raise RuntimeError(
             f"zorder row-count drift at {path}: {folded_rows} in, {n_new} out"
         )
-    out_files = carried + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during zorder")
-        if latest["version"] != base_version:
-            # same rebase rule as compaction: re-clustering the folded set
-            # never conflicts with concurrently ADDED rows; it conflicts
-            # only when a concurrent commit touched a folded file
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=folded, produced=new_files,
-                op="zorder", mapping=mapping, allow_any_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            "data_change": False,
-            "clustered_by": list(cols),
-        }
-        if where is not None:
-            out["clustered_where"] = where
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="zorder")
+    extra = {"data_change": False, "clustered_by": list(cols)}
+    if where is not None:
+        extra["clustered_where"] = where
+    return _commit_rewrite(
+        spark, path, cur, base_version, op="zorder",
+        replaced=folded, produced=new_files,
+        files=carried + new_files, n_rows=cur["n_rows"],
+        extra=extra,
+        # same rebase rule as compaction: re-clustering the folded set
+        # never conflicts with concurrently ADDED rows; it conflicts
+        # only when a concurrent commit touched a folded file
+        allow_any_adds=True,
+    )
 
 
 def snapshot_scan(
@@ -7243,39 +7035,36 @@ def _entries_to_files_df(spark: SparkSession, entries: list[dict]) -> DataFrame:
 
 def _files_df_of(spark: SparkSession, path: str, m: dict) -> DataFrame:
     ck = m.get("files_ckpt")
-    if ck is not None and ck.get("layout") == "typed":
-        abs_p = os.path.join(_manifest_dir(path), ck["ref"])
-        if os.path.isfile(abs_p):
-            df = spark.read.parquet(abs_p)
-            stats_cols = ck.get("stats_cols") or []
-            part_cols = ck.get("part_cols") or []
-            sel = [F.col("path"), F.col("rows")]
-            if part_cols:
-                kv = []
-                for j_, c in enumerate(part_cols):
-                    kv += [F.lit(c), F.col(f"p{j_}")]
-                sel.append(
-                    F.when(F.col("part_null"), F.lit(None))
-                    .otherwise(F.create_map(*kv))
-                    .alias("partition")
-                )
-            else:
-                sel.append(
-                    F.lit(None)
-                    .cast("map<string,string>")
-                    .alias("partition")
-                )
-            sel += [
-                F.col("dv_ref"),
-                F.col("dv_n"),
-                F.col("bloom_ref"),
-            ]
-            for i, c in enumerate(stats_cols):
-                sel.append(F.col(f"s{i}_min").alias(f"smin_{c}"))
-                sel.append(F.col(f"s{i}_max").alias(f"smax_{c}"))
-            return df.select(*sel)
-        # metadata plane on a non-Spark-readable store: driver reconstruct
-        return _entries_to_files_df(spark, _read_parquet_checkpoint(path, ck))
+    abs_p = os.path.join(_manifest_dir(path), ck["ref"]) if ck else None
+    if ck and ck.get("layout") == "typed" and os.path.isfile(abs_p):
+        df = spark.read.parquet(abs_p)
+        stats_cols = ck.get("stats_cols") or []
+        part_cols = ck.get("part_cols") or []
+        sel = [F.col("path"), F.col("rows")]
+        if part_cols:
+            kv = []
+            for j_, c in enumerate(part_cols):
+                kv += [F.lit(c), F.col(f"p{j_}")]
+            sel.append(
+                F.when(F.col("part_null"), F.lit(None))
+                .otherwise(F.create_map(*kv))
+                .alias("partition")
+            )
+        else:
+            sel.append(
+                F.lit(None)
+                .cast("map<string,string>")
+                .alias("partition")
+            )
+        sel += [
+            F.col("dv_ref"),
+            F.col("dv_n"),
+            F.col("bloom_ref"),
+        ]
+        for i, c in enumerate(stats_cols):
+            sel.append(F.col(f"s{i}_min").alias(f"smin_{c}"))
+            sel.append(F.col(f"s{i}_max").alias(f"smax_{c}"))
+        return df.select(*sel)
     if "files_base" in m:
         base = _files_df_of(spark, path, _read_manifest(path, m["files_base"]))
         ek = F.concat_ws(
@@ -7290,6 +7079,9 @@ def _files_df_of(spark: SparkSession, path: str, m: dict) -> DataFrame:
                 _entries_to_files_df(spark, adds), allowMissingColumns=True
             )
         return out
+    # inline/legacy lists, json-layout checkpoints, and typed sidecars on a
+    # store Spark cannot read: entries resolved in Python (a sidecar
+    # through the cached Arrow handle)
     return _entries_to_files_df(spark, _manifest_files(path, m))
 
 

@@ -45,6 +45,17 @@ def write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
     write.save(path)
 
 
+def scratch_path(name: str) -> str:
+    """Path of scratch entry ``name``: ``spark_graft_scratch/<name>`` under
+    ``$SPARK_GRAFT_SCRATCH``, or under the system temp dir when it is
+    unset."""
+    import os
+    import tempfile
+
+    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
+    return f"{root}/spark_graft_scratch/{name}"
+
+
 def scratch_materialize(
     df: DataFrame, name: str = "scratch", reuse: bool = True
 ) -> DataFrame:
@@ -77,12 +88,8 @@ def scratch_materialize(
     The commit is an atomic directory rename, so a concurrent twin of the
     same key either wins the rename or reads the winner's copy.
     """
-    import os
-    import shutil
-    import tempfile
     import uuid
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
     try:
         spark = df.sparkSession
         if reuse:
@@ -103,7 +110,7 @@ def scratch_materialize(
             if cached is not None:
                 return cached
             return spark.read.parquet(path)
-        path = f"{root}/spark_graft_scratch/{name}-{uuid.uuid4().hex[:12]}"
+        path = scratch_path(f"{name}-{uuid.uuid4().hex[:12]}")
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
     except Exception:  # pragma: no cover - scratch space unavailable
@@ -134,10 +141,7 @@ def _normalize_cte_ids(canon: str) -> str:
 def _scratch_key(df: DataFrame, name: str) -> tuple[str, str, str]:
     """(digest, schema_json, path) for the plan-fingerprint scratch cache."""
     import hashlib
-    import os
-    import tempfile
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
     analyzed = df._jdf.queryExecution().analyzed()
     canon = _normalize_cte_ids(analyzed.canonicalized().toString())
     # canonicalized().toString() normalizes expression IDs (so two
@@ -154,7 +158,7 @@ def _scratch_key(df: DataFrame, name: str) -> tuple[str, str, str]:
         f"{canon}\n{sem}\n{files}\n{schema_json}".encode()
     ).hexdigest()
     app = df.sparkSession.sparkContext.applicationId
-    path = f"{root}/spark_graft_scratch/{name}-{app}-{digest[:20]}"
+    path = scratch_path(f"{name}-{app}-{digest[:20]}")
     return digest, schema_json, path
 
 

@@ -385,6 +385,10 @@ def foreach_batch_upsert(
     """
     from pyspark.sql import Window
 
+    from music_recommendation_service_spark.sources.snapshots import (
+        _latest_per_key,
+    )
+
     def upsert(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         latest = _latest_per_key(batch, key_cols, seq_col).withColumn(
@@ -478,19 +482,6 @@ def foreach_batch_merge(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _latest_per_key(
-    df: DataFrame, key_cols: tuple[str, ...], seq_col: str
-) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def write_stream_parquet(

@@ -32,6 +32,25 @@ def _mk(spark, tmp_path, name="pt", rows=BASE, pby=("year",)):
     return p
 
 
+def _race_before_commit(monkeypatch, path, action):
+    """Run ``action()`` as a concurrent commit the first time an operation
+    commits at ``path``: after it read its base state and landed its data,
+    before it claims a version. Hooks ``_commit``, so it also races
+    operations that write no data dir."""
+    real = S._commit
+    fired = {"done": False}
+
+    def racing(p_, build, op=None):
+        if p_ == path and not fired["done"]:
+            fired["done"] = True
+            with monkeypatch.context() as mp:
+                mp.setattr(S, "_commit", real)
+                action()
+        return real(p_, build, op=op)
+
+    monkeypatch.setattr(S, "_commit", racing)
+
+
 def test_partitioned_write_roundtrip_and_manifest_shape(spark, tmp_path):
     p = _mk(spark, tmp_path)
     m = S._latest_manifest(p)
@@ -135,17 +154,9 @@ def test_cross_partition_writers_rebase_not_abort(spark, tmp_path, monkeypatch):
     rebases via the partition [v, v] stats disjointness proof — sharded
     per-partition maintenance never serializes (judge r9 order #1)."""
     p = _mk(spark, tmp_path)
-
-    real = S._commit
-    fired = {"done": False}
-
-    def racing(path, build, op=None):
-        if path == p and not fired["done"]:
-            fired["done"] = True
-            S.snapshot_delete_where(spark, p, "year = 1991")
-        return real(path, build, op=op)
-
-    monkeypatch.setattr(S, "_commit", racing)
+    _race_before_commit(
+        monkeypatch, p, lambda: S.snapshot_delete_where(spark, p, "year = 1991")
+    )
     v = S.snapshot_delete_where(spark, p, "year = 1990")
     monkeypatch.undo()
     assert v == 3  # base, raced 1991-drop, rebased 1990-drop — no retry
@@ -182,17 +193,9 @@ def test_same_partition_writers_conflict(spark, tmp_path, monkeypatch):
     """Two writers on the SAME partition still conflict — the scoping is
     real, not a rubber stamp."""
     p = _mk(spark, tmp_path)
-
-    real = S._commit
-    fired = {"done": False}
-
-    def racing(path, build, op=None):
-        if path == p and not fired["done"]:
-            fired["done"] = True
-            S.snapshot_delete_where(spark, p, "year = 1990")
-        return real(path, build, op=op)
-
-    monkeypatch.setattr(S, "_commit", racing)
+    _race_before_commit(
+        monkeypatch, p, lambda: S.snapshot_delete_where(spark, p, "year = 1990")
+    )
     with pytest.raises(S.ConcurrentSnapshotError):
         S.snapshot_delete_where(spark, p, "year = 1990")
 
@@ -741,6 +744,90 @@ def _race_once_local(monkeypatch, path, action):
         return real(p_)
 
     monkeypatch.setattr(S, "_new_data_dir", racing)
+
+
+def test_replace_where_rebase_carries_manifest_extra(spark, tmp_path, monkeypatch):
+    """replaceWhere raced by an append into another partition rebases in
+    one commit, with the right live row count and its ``manifest_extra``."""
+    p = _mk(spark, tmp_path)
+    _race_before_commit(
+        monkeypatch, p,
+        lambda: S.snapshot_append(_pdf(spark, [(888, 1999, "raced")]), p),
+    )
+    v = S.snapshot_replace_where(
+        _pdf(spark, [(1000, 1991, "new")]), p, "year = 1991",
+        manifest_extra={"source_version": 7},
+    )
+    assert v == 3  # base, raced append, rebased replace
+    got = S.snapshot_read(spark, p)
+    assert {r["k"] for r in got.filter(F.col("year") == 1991).collect()} == {1000}
+    assert got.filter(F.col("k") == 888).count() == 1
+    m = S._latest_manifest(p)
+    assert m["op"] == "replace_where" and m["source_version"] == 7
+    assert m["n_rows"] == got.count() == 22  # 20 carried + 1 replaced + 1 raced
+
+
+def test_dynamic_partition_overwrite_aborts_on_any_concurrent_add(
+    spark, tmp_path, monkeypatch
+):
+    """Any concurrently added row conflicts, even one in a partition the
+    overwrite does not touch: tuple membership has no predicate that could
+    prove the add disjoint."""
+    p = _mk(spark, tmp_path)
+    _race_before_commit(
+        monkeypatch, p,
+        lambda: S.snapshot_append(_pdf(spark, [(888, 1999, "raced")]), p),
+    )
+    with pytest.raises(S.ConcurrentSnapshotError):
+        S.snapshot_dynamic_partition_overwrite(_pdf(spark, [(5000, 1992, "re")]), p)
+    assert S.snapshot_versions(p) == [1, 2]
+    assert S.snapshot_read(spark, p).count() == 31
+
+
+def test_dynamic_partition_overwrite_rebases_over_untouched_dv_delete(
+    spark, tmp_path, monkeypatch
+):
+    """A concurrent commit that adds no file and touches no overwritten
+    partition (a DV delete in another partition) rebases."""
+    p = _mk(spark, tmp_path)
+    _race_before_commit(
+        monkeypatch, p, lambda: S.snapshot_delete_where(spark, p, "k = 0", mode="dv")
+    )
+    v = S.snapshot_dynamic_partition_overwrite(
+        _pdf(spark, [(5000, 1992, "re")]), p, manifest_extra={"source_version": 3}
+    )
+    assert v == 3
+    got = S.snapshot_read(spark, p)
+    assert 0 not in {r["k"] for r in got.collect()}  # k=0 is year 1990
+    assert {r["k"] for r in got.filter(F.col("year") == 1992).collect()} == {5000}
+    m = S._latest_manifest(p)
+    assert m["op"] == "dynamic_overwrite" and m["source_version"] == 3
+    assert m["n_rows"] == got.count() == 20  # 9 + 10 carried, 1 written
+
+
+def test_partition_drop_rebases_over_out_of_scope_append(spark, tmp_path, monkeypatch):
+    """The metadata-only DROP-PARTITION delete, raced by an append into
+    another partition, rebases (the append's [v, v] stats prove it cannot
+    match the predicate) and still lands no data of its own."""
+    p = _mk(spark, tmp_path)
+    _race_before_commit(
+        monkeypatch, p,
+        lambda: S.snapshot_append(_pdf(spark, [(888, 1999, "raced")]), p),
+    )
+
+    def no_scan(*a, **k):  # the row-level fallback's discovery scan
+        raise AssertionError("partition drop fell back to a row-level delete")
+
+    monkeypatch.setattr(S, "_predicate_file_split", no_scan)
+    before = {e["path"] for e in S._manifest_files(p, S._latest_manifest(p))}
+    v = S.snapshot_delete_where(spark, p, "year = 1990")
+    assert v == 3
+    m = S._latest_manifest(p)
+    added = {e["path"] for e in S._manifest_files(p, m)} - before
+    assert added and all("year=1999" in f for f in added)  # the raced append's
+    got = S.snapshot_read(spark, p)
+    assert got.filter(F.col("year") == 1990).count() == 0
+    assert m["op"] == "delete_where" and m["n_rows"] == got.count() == 21
 
 
 def test_show_partitions_and_describe_detail(spark, tmp_path):

@@ -685,24 +685,27 @@ def test_delete_where_aborts_on_matching_append(spark, tmp_path, monkeypatch):
 
 
 def test_update_where_rebases_over_nonmatching_append(spark, tmp_path, monkeypatch):
+    """Predicate UPDATE follows the same rebase rule as DELETE. Covers
+    rewrite and dv modes."""
     from music_recommendation_service_spark.sources import snapshots as S
 
-    path = str(tmp_path / "upd_rebase")
-    S.snapshot_write(
-        _snap_df(spark, [(1, 1, "a"), (2, 1, "b")]), path, stats_cols=["k"]
-    )
-    _race_once(
-        monkeypatch, S, path,
-        lambda: S.snapshot_append(
-            _snap_df(spark, [(99, 1, "raced")]), path, stats_cols=["k"]
-        ),
-    )
-    v = S.snapshot_update_where(
-        spark, path, "k <= 1", {"payload": "'updated'"}, mode="dv"
-    )
-    assert v == 3
-    got = {r["k"]: r["payload"] for r in S.snapshot_read(spark, path).collect()}
-    assert got == {1: "updated", 2: "b", 99: "raced"}
+    for mode in ("rewrite", "dv"):
+        path = str(tmp_path / f"upd_rebase_{mode}")
+        S.snapshot_write(
+            _snap_df(spark, [(1, 1, "a"), (2, 1, "b")]), path, stats_cols=["k"]
+        )
+        _race_once(
+            monkeypatch, S, path,
+            lambda p=path: S.snapshot_append(
+                _snap_df(spark, [(99, 1, "raced")]), p, stats_cols=["k"]
+            ),
+        )
+        v = S.snapshot_update_where(
+            spark, path, "k <= 1", {"payload": "'updated'"}, mode=mode
+        )
+        assert v == 3, mode
+        got = {r["k"]: r["payload"] for r in S.snapshot_read(spark, path).collect()}
+        assert got == {1: "updated", 2: "b", 99: "raced"}, mode
 
 
 def test_snapshot_append_rebases_on_conflict(spark, tmp_path, monkeypatch):
